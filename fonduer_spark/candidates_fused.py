@@ -10,9 +10,15 @@ physical strategies:
   product+filters+throttler per document — zero shuffles before the final
   aggregation, no intermediate mention materialization/persist. This is the
   BASELINE.json "salted, skew-aware flatMap-style DataFrame transform" in
-  its literal form; skew from hot documents is bounded by the per-doc cap
-  ``max_mentions_per_doc`` (documents above it are flagged to a side channel
-  rather than silently exploding the task).
+  its literal form.
+
+A throttler that declares blocking keys (``same_row_py.block_keys``) gets an
+output-sensitive product: a per-document hash index on the keys makes it
+O(|A| + |B| + output) instead of |A| x |B|, so hot documents cost what they
+emit and ``extract_candidates_auto`` never routes them. Only an unkeyed
+throttler's product is quadratic; for those, ``max_mentions_per_doc`` flags
+documents above the cap to a side channel that ``extract_candidates_auto``
+routes through the join path rather than silently exploding the task.
 
 Both strategies emit identical rows (asserted in tests and by the driver's
 oracle, which is strategy-independent).
@@ -59,6 +65,10 @@ CANDIDATE_SCHEMA_SLIM = T.StructType(
     [f for f in CANDIDATE_SCHEMA.fields if f.name in SLIM_COLUMNS])
 SLIM_COLUMNS = [f.name for f in CANDIDATE_SCHEMA_SLIM.fields]
 
+# A throttler may carry a ``block_keys(m) -> iterable of hashables``
+# attribute, valid only if throttler(a, b) implies that a and b share a key.
+# The keys are a pre-filter: the throttler still decides every pair they let
+# through.
 PyThrottler = Callable[[dict, dict], bool]
 
 # candidate_type of the hot-doc overflow marker rows emitted by the fused
@@ -75,6 +85,16 @@ def same_row_py(a: dict, b: dict) -> bool:
     )
 
 
+def _same_row_keys(m: dict):
+    """Two mentions pass same_row_py only if they share a (table, row)."""
+    if m["table_sid"] is None:
+        return ()
+    return [(m["table_sid"], r) for r in range(m["row_start"], m["row_end"] + 1)]
+
+
+same_row_py.block_keys = _same_row_keys
+
+
 def _doc_candidates(
     mentions_by_type: dict,
     candidate_type: str,
@@ -89,11 +109,24 @@ def _doc_candidates(
     slim: bool = False,
 ) -> None:
     """Product + filters for one document (reference candidates.py:248-325
-    semantics, including filter order)."""
+    semantics, including filter order). With a keyed throttler, each ``a``
+    is paired only with the ``b`` that share one of its keys, found through
+    a hash index on ``ms_b``; rows come out in nested-loop order either
+    way."""
     ms_a = mentions_by_type.get(type_a, ())
     ms_b = mentions_by_type.get(type_b, ())
-    for ai, a in enumerate(ms_a):
+    keys = getattr(throttler, "block_keys", None)
+    if keys is not None:
+        index: dict = {}
         for bi, b in enumerate(ms_b):
+            for k in keys(b):
+                index.setdefault(k, []).append(bi)
+    every_b = range(len(ms_b))
+    for ai, a in enumerate(ms_a):
+        bis = every_b if keys is None else sorted(
+            {bi for k in keys(a) for bi in index.get(k, ())})
+        for bi in bis:
+            b = ms_b[bi]
             if throttler is not None and not throttler(a, b):
                 continue
             if not self_relations and a["stable_id"] == b["stable_id"]:
@@ -145,19 +178,20 @@ def extract_candidates_fused(
     split: int = 0,
     render=None,
     parse_cfg=None,
-    max_mentions_per_doc: int = 10_000,
+    max_mentions_per_doc: Optional[int] = 10_000,
     slim: bool = False,
 ) -> DataFrame:
     """(doc_id, text) -> candidate rows, one python stage, no shuffle.
 
-    Hot-doc guard: a document whose mention count exceeds
-    ``max_mentions_per_doc`` would make this task quadratic — its product is
-    NOT computed here; instead one marker row with
-    ``candidate_type = OVERFLOW_TYPE`` (url/split set, mention columns null)
-    is emitted so the overflow is detectable. ``extract_candidates_auto``
+    Hot-doc guard: the product of a document whose mention count exceeds
+    ``max_mentions_per_doc`` is NOT computed here; instead one marker row
+    with ``candidate_type = OVERFLOW_TYPE`` (url/split set, mention columns
+    null) is emitted so the overflow is detectable. ``extract_candidates_auto``
     consumes the markers and routes those documents through the relational
     join path (salted/AQE — built for skew); callers using this function
-    directly must filter or route the markers themselves.
+    directly must filter or route the markers themselves. ``None`` disables
+    the cap (``extract_candidates_auto`` does so for keyed throttlers, whose
+    product is output-sensitive).
     """
     from .corpus import render_page, url_of
     from .lingual import SimpleParser
@@ -189,7 +223,8 @@ def extract_candidates_fused(
                     for m in iter_sentence_mentions(row, spec_list, fast_list):
                         by_type.setdefault(m["mention_type"], []).append(m)
                         n_mentions += 1
-                if n_mentions > max_mentions_per_doc:
+                if (max_mentions_per_doc is not None
+                        and n_mentions > max_mentions_per_doc):
                     # skew overflow: emit the marker row (url only) so the
                     # doc is detectable and routable via the join path
                     # (extract_candidates_auto); never silently dropped
@@ -234,13 +269,20 @@ def extract_candidates_auto(
 ) -> DataFrame:
     """Fused candidate generation with hot-doc overflow ROUTED, not dropped.
 
-    Normal documents take the fused single-stage path; documents whose
-    mention count exceeds ``max_mentions_per_doc`` emit only an overflow
-    marker, are re-selected from ``docs`` (broadcast semi-join on the tiny
-    marker set), and their quadratic product runs through the relational
-    join path with explicit salting — the strategy built for skew
-    (candidates_op.extract_candidates). The union is row-identical to
-    running either strategy alone (asserted in tests).
+    Keyed throttler (``py_throttler.block_keys``, e.g. ``same_row_py``):
+    returns ``extract_candidates_fused`` with no mention cap — one Python
+    stage, no persist, no Spark job at construction, no overflow branch.
+    The keyed product is O(|A| + |B| + output) per document, so no document
+    needs routing; ``max_mentions_per_doc``, ``probe``, ``persist`` and
+    ``column_throttler`` do not apply.
+
+    Unkeyed throttler: normal documents take the fused single-stage path;
+    documents whose mention count exceeds ``max_mentions_per_doc`` emit
+    only an overflow marker, are re-selected from ``docs`` (broadcast
+    semi-join on the tiny marker set), and their quadratic product runs
+    through the relational join path with explicit salting — the strategy
+    built for skew (candidates_op.extract_candidates). The union is
+    row-identical to running either strategy alone (asserted in tests).
 
     ``py_throttler``/``column_throttler`` must be the same predicate in its
     two physical forms (e.g. same_row_py / same_row); overflow docs use the
@@ -252,43 +294,44 @@ def extract_candidates_auto(
     drivers building many pipelines should unpersist or rely on LRU block
     eviction.
 
-    ``probe="eager"`` (r07, requires ``persist``): run the fused stage AT
-    CALL TIME (one job — the same job the overflow branch's broadcast
-    would trigger at first action anyway) and, when ZERO documents
-    overflow, return the normal branch alone. The union's join-path
-    subtree — a Python mention stage plus several salted-join shuffle
-    stages that all carry zero rows — is never planned, saving its task
-    churn on every downstream action. Rows are identical either way
-    (overflow docs still route through the join path when present); the
-    only change is that query CONSTRUCTION becomes eager, which is why
-    the default stays "lazy" for library callers.
+    ``probe="eager"`` (requires ``persist``, else ValueError): run the
+    fused stage AT CALL TIME (one job — the same job the overflow branch's
+    broadcast would trigger at first action anyway) and, when ZERO
+    documents overflow, return the normal branch alone, so the union's
+    empty join-path subtree is never planned. Rows are identical either
+    way; only query CONSTRUCTION becomes eager, which is why the default
+    stays "lazy".
     """
     from pyspark.sql import functions as F
 
     from .candidates_op import extract_candidates
     from .mentions_op import extract_mentions_fused
 
+    if probe not in ("lazy", "eager"):
+        raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
+    keyed = getattr(py_throttler, "block_keys", None) is not None
+    if not keyed and probe == "eager" and not persist:
+        raise ValueError("probe='eager' needs persist=True: the probe "
+                         "fills the cache the overflow branch reads")
     fused = extract_candidates_fused(
         docs, specs, candidate_type, type_a, type_b,
         throttler=py_throttler, self_relations=self_relations,
         nested_relations=nested_relations,
         symmetric_relations=symmetric_relations, split=split,
         render=render, parse_cfg=parse_cfg,
-        max_mentions_per_doc=max_mentions_per_doc, slim=slim,
+        max_mentions_per_doc=None if keyed else max_mentions_per_doc,
+        slim=slim,
     )
-    if probe not in ("lazy", "eager"):
-        raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
+    if keyed:
+        return fused
     if persist:
         fused = fused.persist()
     normal = fused.where(F.col("candidate_type") != OVERFLOW_TYPE)
-    if probe == "eager" and persist:
-        # materializes the (persisted) fused frame now; the overflow branch
-        # below would trigger the identical job at first action, so this
-        # moves — not adds — a job, and lets the no-overflow case skip the
-        # empty join-path subtree entirely. count(), NOT isEmpty(): take(1)
-        # escalates over partition subsets (1 -> 4 -> 20 -> all) and would
-        # run the Python parse in sequential low-parallelism waves when no
-        # marker exists; count() fills the cache in one full-width job.
+    if probe == "eager":
+        # count(), NOT isEmpty(): take(1) escalates over partition subsets
+        # (1 -> 4 -> 20 -> all) and would run the Python parse in
+        # sequential low-parallelism waves when no marker exists; count()
+        # fills the cache in one full-width job.
         n_over = fused.where(
             F.col("candidate_type") == OVERFLOW_TYPE).count()
         if n_over == 0:

@@ -28,38 +28,6 @@ PART_RGX = r"PN\d{3}[A-C]"
 TEMP_RGX = r"-?\d{1,3}"
 
 
-class LazyStages(dict):
-    """Stage dict with on-access construction (r07).
-
-    kg_stages used to construct every stage DataFrame up front; with the
-    r07 eager overflow probe (extract_candidates_auto(probe="eager")),
-    candidate construction runs a Spark job, so building unrequested
-    stages would charge every caller for the parse pass even when it only
-    reads e.g. ``mentions``. Access is memoized, so repeated ``st["x"]``
-    returns the same DataFrame object (the unpersist contract callers
-    rely on). Supports exactly the access patterns the codebase uses:
-    ``st["key"]``, ``"key" in st``, iteration over names.
-    """
-
-    def __init__(self, builders):
-        super().__init__()
-        self._builders = dict(builders)
-
-    def __getitem__(self, key):
-        if not super().__contains__(key):
-            super().__setitem__(key, self._builders[key]())
-        return super().__getitem__(key)
-
-    def __contains__(self, key):
-        return key in self._builders
-
-    def __iter__(self):
-        return iter(self._builders)
-
-    def keys(self):
-        return self._builders.keys()
-
-
 def default_mention_specs() -> list:
     return [
         MentionSpec(
@@ -106,6 +74,7 @@ def kg_stages(
     label_model: str = "majority",
 ) -> Dict[str, DataFrame]:
     """Build every stage lazily; returns the dict of stage DataFrames.
+    Construction runs no Spark job, except the "triplet" label model's fit.
 
     ``label_model``: "majority" (the default, a pure projection — and what
     the gold oracle assumes for the default LFs) or "triplet" (the
@@ -115,89 +84,65 @@ def kg_stages(
     - "fused" (default): the candidate product is document-local, so
       render+parse+mentions+product+filters run in ONE flatMap-style Python
       stage — zero shuffles before the triple aggregation (no mention
-      materialization/persist). Hot docs above the per-doc mention cap route
-      to the join path.
+      materialization/persist). ``same_row_py`` is a keyed throttler, so
+      hot documents stay in that stage: their product costs what it emits.
     - "join": materialize mentions, then the relational equi-join on url
       with column-predicate throttlers (explicit salting + AQE skew-join) —
       the general path for cross-document relations; also what salt_buckets
       implies.
-    Both produce identical rows (tested + oracle-checked).
+    Both produce identical rows (tested + oracle-checked). Callers release
+    ``stages["mentions"]`` with ``unpersist()``; only the join strategy
+    persists it.
     """
     pages = make_web_pages(spark, sf_dir, max_docs, replicate=replicate)
     parsed = parse_webpages(pages)
     sentences = contexts_of(parsed, "sentence")
     docs = load_docs(spark, sf_dir, max_docs, replicate)
-    st = None  # set below; builders close over it for cross-stage reuse
-
     # mentions as a standalone frame (fused render+parse+extract — one
-    # python stage); persisted lazily because the join strategy reads it
-    # twice. Only constructed if a caller accesses it.
-    def build_mentions() -> DataFrame:
-        return extract_mentions_fused(
-            docs, default_mention_specs()).persist()
+    # python stage)
+    mentions = extract_mentions_fused(docs, default_mention_specs())
 
     if candidate_strategy == "join" or salt_buckets > 0:
-        def build_candidates() -> DataFrame:
-            return extract_candidates(
-                st["mentions"], "part_temp", "part", "temp",
-                throttler=same_row, throttler_kind="column",
-                salt_buckets=salt_buckets,
-            )
-
-        def build_scored_input() -> DataFrame:
-            return st["candidates"]
+        mentions = mentions.persist()  # the self-join reads it twice
+        candidates = extract_candidates(
+            mentions, "part_temp", "part", "temp",
+            throttler=same_row, throttler_kind="column",
+            salt_buckets=salt_buckets,
+        )
+        scored_input = candidates
     else:
         from .candidates_fused import extract_candidates_auto, same_row_py
+        from .parse import ParseConfig
 
-        # auto = fused single-stage path + hot-doc overflow routed through
-        # the salted join path (never dropped); the per-doc mention cap only
-        # bounds the quadratic product of the fused stage. probe="eager"
-        # (r07): the fused stage materializes at stage-construction time
-        # (the job the overflow branch's broadcast would run anyway) and
-        # the usual zero-overflow case skips the empty join-path subtree —
-        # which is why stage construction is lazy now (LazyStages):
-        # callers that never touch candidates never pay the probe.
-        def build_candidates() -> DataFrame:
+        def auto(**kw) -> DataFrame:
             return extract_candidates_auto(
                 docs, default_mention_specs(), "part_temp", "part", "temp",
-                py_throttler=same_row_py, column_throttler=same_row,
-                probe="eager",
-            )
+                py_throttler=same_row_py, column_throttler=same_row, **kw)
 
+        candidates = auto()
         # label/triple path reads a SLIM variant (8 columns instead of 46):
         # same rows, ~7x less pandas/Arrow transfer. structural=False skips
         # xpath/sibling/ancestor attach entirely — the label/triple path
         # never reads them, and the DOM walks are ~15% of the fused stage's
         # CPU (measured at 32 cores). The wide `candidates` frame keeps the
         # full structural parse for featurization queries.
-        from .parse import ParseConfig
+        scored_input = auto(slim=True, parse_cfg=ParseConfig(structural=False))
 
-        def build_scored_input() -> DataFrame:
-            return extract_candidates_auto(
-                docs, default_mention_specs(), "part_temp", "part", "temp",
-                py_throttler=same_row_py, column_throttler=same_row,
-                slim=True, parse_cfg=ParseConfig(structural=False),
-                probe="eager",
-            )
+    if label_model == "triplet":
+        from .labeling import triplet_marginals
 
-    def build_scored() -> DataFrame:
-        if label_model == "triplet":
-            from .labeling import triplet_marginals
-
-            return triplet_marginals(build_scored_input(), default_lfs())
-        return with_marginals(build_scored_input(), default_lfs())
-
-    st = LazyStages({
-        "web_pages": lambda: pages,
-        "parsed": lambda: parsed,
-        "sentences": lambda: sentences,
-        "mentions": build_mentions,
-        "candidates": build_candidates,
-        "scored": build_scored,
-        "triples": lambda: materialize_triples(
-            st["scored"], pred=PRED, prob_threshold=0.5),
-    })
-    return st
+        scored = triplet_marginals(scored_input, default_lfs())
+    else:
+        scored = with_marginals(scored_input, default_lfs())
+    return {
+        "web_pages": pages,
+        "parsed": parsed,
+        "sentences": sentences,
+        "mentions": mentions,
+        "candidates": candidates,
+        "scored": scored,
+        "triples": materialize_triples(scored, pred=PRED, prob_threshold=0.5),
+    }
 
 
 def kg_triples(

@@ -182,8 +182,9 @@ def test_mention_dedup_flag(spark):
 
 def test_overflow_marker_and_routing(spark):
     """Hot-doc overflow: the fused stage emits a marker (never silently
-    drops), and extract_candidates_auto routes the doc through the join
-    path — the union is row-identical to the pure join strategy."""
+    drops), and extract_candidates_auto still yields the doc's candidates —
+    row-identical to the pure join strategy (same_row_py is keyed, so auto
+    computes them uncapped in the fused stage)."""
     from fonduer_spark.candidates_fused import (
         OVERFLOW_TYPE, extract_candidates_auto, extract_candidates_fused,
         same_row_py)
@@ -283,9 +284,11 @@ def test_nary_nullable_slot(spark, mentions_df):
 def test_skew_corpus_strategies_row_identical(spark):
     """VERDICT r3 item 10: on an adversarial hot-doc corpus (bench.py
     skew_render: doc 0 carries 175 tables, ~100x the median mention count)
-    the three candidate strategies — fused, salted join, and auto with the
-    overflow routed — produce IDENTICAL rows, and the auto path's overflow
-    marker actually engages for the hot doc."""
+    the three candidate strategies — fused, salted join, and auto — produce
+    IDENTICAL rows, and the fused stage's overflow marker engages for the
+    hot doc at an explicit cap. same_row_py is keyed, so auto never routes:
+    it runs the fused stage uncapped, and the hot doc's product stays in
+    its task (test_unkeyed_auto_routes_overflow covers the routing)."""
     from bench import skew_render
     from fonduer_spark.candidates_fused import (
         OVERFLOW_TYPE, extract_candidates_auto, extract_candidates_fused,
@@ -322,5 +325,106 @@ def test_skew_corpus_strategies_row_identical(spark):
     got = {tuple(r) for r in routed.select(*cols).collect()}
     want = {tuple(r) for r in joined.select(*cols).collect()}
     assert got == want
-    # the hot doc's quadratic product went through the join path un-dropped
+    # the hot doc's product is present, un-dropped
     assert sum(1 for t in got if t[0].startswith(url_of(0))) > 1000
+
+
+def test_keyed_product_matches_nested_loop():
+    """same_row_py's blocking keys only pre-filter the product: on the skew
+    corpus (hot doc 0, rowspan footer cells, mentions outside any table)
+    the keyed product emits exactly the nested loop's rows, in its order,
+    for both symmetric settings, slim and wide rows, and a same-type pair."""
+    import pyarrow.parquet as pq
+
+    from bench import skew_render
+    from fonduer_spark.candidates_fused import _doc_candidates, same_row_py
+    from fonduer_spark.corpus import url_of
+    from fonduer_spark.mentions_op import (_fast_unigram_regex,
+                                           iter_sentence_mentions)
+    from fonduer_spark.parse import ParseConfig, parse_document
+    from fonduer_spark.pipeline import default_mention_specs
+
+    t = pq.read_table("/root/testdata/sf0.001/documents.parquet",
+                      columns=["doc_id", "text"]).to_pydict()
+    specs = default_mention_specs()
+    fast = [_fast_unigram_regex(s) for s in specs]
+    cfg = ParseConfig()
+    lp = cfg.make_lingual_parser()
+    docs = []
+    for i, text in list(zip(t["doc_id"], t["text"]))[:40]:
+        by_type = {}
+        for row in parse_document(url_of(i), skew_render(i, text), cfg, lp,
+                                  emit_types={"sentence"}):
+            for m in iter_sentence_mentions(row, specs, fast):
+                by_type.setdefault(m["mention_type"], []).append(m)
+        docs.append(by_type)
+    assert any(m["table_sid"] is None for d in docs for m in d["temp"])
+    # the corpus has no multi-row cells: add a table whose cells share
+    # several rows, listed out of row order, behind enough untabled mentions
+    # that their indexes do not come out of a set in sorted order
+    def cell(mtype, k, r0, r1):
+        m = mention(mtype, "d9", k, k, 0, 2, str(k), k, table="d9::table:0",
+                    row=r0)
+        m["row_end"] = r1
+        return m
+
+    temps = [mention("temp", "d9", k, k, 0, 2, str(k), k) for k in range(46)]
+    temps += [cell("temp", 46 + k, r0, r1) for k, (r0, r1) in
+              enumerate([(4, 4), (3, 5), (2, 3), (1, 3), (0, 0)])]
+    docs.append({"part": [cell("part", 60, 1, 3), cell("part", 61, 0, 5)],
+                 "temp": temps})
+
+    assert same_row_py.block_keys is not None
+
+    def unkeyed(a, b):
+        return same_row_py(a, b)
+
+    n = 0
+    for types in (("part", "temp"), ("temp", "temp")):
+        for symmetric in (True, False):
+            for slim in (True, False):
+                for by_type in docs:
+                    keyed, loop = [], []
+                    for throttler, out in ((same_row_py, keyed),
+                                           (unkeyed, loop)):
+                        _doc_candidates(by_type, "c", *types, throttler,
+                                        False, False, symmetric, 0, out,
+                                        slim=slim)
+                    assert keyed == loop
+                    n += len(keyed)
+    assert n > 10_000
+
+
+def test_unkeyed_auto_routes_overflow(spark):
+    """An unkeyed throttler keeps auto's routing: over-cap documents go
+    through the salted join path, lazily or after the eager probe, and the
+    union equals the pure join strategy. The eager probe fills the cache
+    persist makes, so asking for it without persist is an error."""
+    from fonduer_spark.candidates_fused import (extract_candidates_auto,
+                                                same_row_py)
+    from fonduer_spark.corpus import load_docs, url_of
+    from fonduer_spark.mentions_op import extract_mentions_fused
+    from fonduer_spark.pipeline import default_mention_specs
+
+    docs = load_docs(spark, "/root/testdata/sf0.001", max_docs=8)
+    specs = default_mention_specs()
+    cols = ["candidate_sid", "a_span_text", "b_span_text"]
+    want = {tuple(r) for r in extract_candidates(
+        extract_mentions_fused(docs, specs), "part_temp", "part", "temp",
+        throttler=same_row, throttler_kind="column").select(*cols).collect()}
+    for probe in ("lazy", "eager"):
+        routed = extract_candidates_auto(
+            docs, specs, "part_temp", "part", "temp",
+            py_throttler=lambda a, b: same_row_py(a, b),
+            column_throttler=same_row, max_mentions_per_doc=40, probe=probe)
+        assert "Union" in routed._jdf.queryExecution().optimizedPlan().toString()
+        got = {tuple(r) for r in routed.select(*cols).collect()}
+        assert got == want
+        assert any(sid.startswith(url_of(0)) for sid, _, _ in got)
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="persist"):
+        extract_candidates_auto(
+            docs, specs, "part_temp", "part", "temp",
+            py_throttler=lambda a, b: same_row_py(a, b),
+            column_throttler=same_row, probe="eager", persist=False)
+

@@ -56,10 +56,8 @@ def test_wholestage_codegen_on_agg(spark):
 def test_fused_pipeline_single_python_stage(spark):
     """The fused candidate stage is ONE MapInPandas python stage
     (render+parse+mentions+product fused, the whole point of the fusion);
-    the auto-routing wrapper's overflow branch reuses the CACHED fused
-    output (InMemoryTableScan in the plan — the corpus is parsed once, and
-    AQE's empty-relation propagation skips the overflow join when no doc
-    overflows)."""
+    with the keyed same_row_py throttler the whole kg_stages triples plan
+    is that one Python stage: no cache, no overflow branch."""
     from fonduer_spark.candidates_fused import (
         extract_candidates_fused, same_row_py)
     from fonduer_spark.corpus import load_docs
@@ -80,8 +78,31 @@ def test_fused_pipeline_single_python_stage(spark):
 
     st = kg_stages(spark, SF, max_docs=10)
     plan2 = plan_of(st["triples"])
-    assert "InMemoryTableScan" in plan2  # overflow scan reuses the cache
+    assert len(re.findall(r"MapInPandas \(\d+\)", plan2)) == 1
+    assert "InMemoryTableScan" not in plan2
+    assert "Union" not in plan2
     st["mentions"].unpersist()
+
+
+def test_keyed_auto_persists_nothing(spark):
+    """extract_candidates_auto with a keyed throttler is the fused stage
+    alone: collecting it leaves no cached RDD behind."""
+    from fonduer_spark.candidates_fused import (
+        extract_candidates_auto, same_row_py)
+    from fonduer_spark.candidates_op import same_row
+    from fonduer_spark.corpus import load_docs
+    from fonduer_spark.pipeline import default_mention_specs
+
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    rows = extract_candidates_auto(
+        load_docs(spark, SF, max_docs=10), default_mention_specs(),
+        "part_temp", "part", "temp", py_throttler=same_row_py,
+        column_throttler=same_row, slim=True).collect()
+    assert rows
+    assert jsc.getPersistentRDDs().isEmpty()
 
 
 def test_minhash_pairs_single_signature_pass(spark):
